@@ -59,6 +59,19 @@ def salted_join(
     return joined.drop("__salt")
 
 
+# Bucketed scans report their sortBy ordering only under this runtime
+# conf, and only when each bucket is ONE file (the layout
+# write_bucketed guarantees): downstream sort-merge joins then skip
+# re-sorting the bucketed side on EVERY read. Measured r13 on
+# q_graph_pagerank: the per-round SMJ's Sort over the 1.18M-row edge
+# side disappears from the plan (plans/r13). Cost: planning lists files
+# of bucketed tables — only the repo's own prepared tables, and at
+# 100 TB one listing per plan vs a full-table sort per iteration is the
+# right trade. Set here, on the session that writes or joins the
+# tables, so the plan does not depend on how that session was built.
+_SORTED_BUCKET_SCANS = "spark.sql.legacy.bucketedTableScan.outputOrdering"
+
+
 def write_bucketed(
     df: DataFrame,
     table_name: str,
@@ -85,10 +98,16 @@ def write_bucketed(
     sits above a union-fed pipeline (measured: 288 task×bucket files
     instead of 32, with or without AQE coalescing), and the barrier is
     the only arrangement that survives every caller's plan shape. The
-    checkpoint blocks are freed once the files are committed."""
+    checkpoint blocks are freed once the files are committed.
+
+    Turns on sorted bucketed scans (``_SORTED_BUCKET_SCANS``) in
+    ``df``'s session, so later reads of the table there keep its sort
+    order."""
     from datafusion_wasm_bindings_spark.operators.checkpoint import (
         make_checkpointer,
     )
+
+    df.sparkSession.conf.set(_SORTED_BUCKET_SCANS, "true")
 
     ckpt = make_checkpointer(None)
     aligned = ckpt(df.repartition(buckets, F.col(key)))
@@ -115,7 +134,9 @@ def bucketed_join(
 ) -> DataFrame:
     """Join two tables previously written by ``write_bucketed`` on the
     same key/bucket-count: Spark plans a sort-merge join with no
-    exchange on either side."""
+    exchange on either side. Turns on sorted bucketed scans
+    (``_SORTED_BUCKET_SCANS``) in ``spark``."""
+    spark.conf.set(_SORTED_BUCKET_SCANS, "true")
     return spark.table(left_table).join(spark.table(right_table), on, how)
 
 

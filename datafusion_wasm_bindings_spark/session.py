@@ -23,6 +23,23 @@ from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "datafusion-wasm-bindings-spark"
 
+# Entries in Spark's generated-class cache (static conf
+# spark.sql.codegen.cache.maxEntries; Spark's default is 100). Spark
+# compiles every whole-stage and expression codegen class with Janino
+# and caches it JVM-wide by its source text; a class evicted before
+# its next use is compiled again (on the driver and in tasks) and
+# starts out interpreted until the JIT warms it again. Measured on
+# 4 vCPUs at sf0.1, the full registry run twice in one session as
+# tools_sweep.py does: 3128-3134 distinct classes compile on pass 1
+# and 99-113 on pass 2 (classes that embed constants computed from the
+# data, so they differ per run); at 100 entries the passes compile
+# 4070 and 4047. Guava splits the cache into 4 independently evicting
+# segments, so the size leaves ~30% over that working set. Cost after
+# the two passes, 100 -> 4096 entries: driver Metaspace 231 -> 257 MB
+# committed; VmRSS 4.9 -> 5.4 GB, which the heap dominates (VmHWM
+# 6.0 -> 5.5 GB).
+CODEGEN_CACHE_MAX_ENTRIES = 4096
+
 
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -53,6 +70,14 @@ def get_spark(
     - AQE on: runtime re-plan (broadcast conversion, skew-join split,
       partition coalescing) — the scale story for 100 TB inputs.
     - Arrow transfers on: vectorized toPandas/createDataFrame paths.
+    - codegen cache sized to the engine's working set
+      (``CODEGEN_CACHE_MAX_ENTRIES``).
+
+    Static confs (the codegen cache size among them) only take effect
+    when this call creates the session. When ``getOrCreate`` returns an
+    existing one, e.g. the session a driver process already started,
+    they keep whatever values that session was built with; runtime
+    confs are applied either way.
     """
     par = shuffle_partitions if shuffle_partitions is not None else default_parallelism()
     builder = (
@@ -73,16 +98,7 @@ def get_spark(
         # 0.316→0.200 s per build. Costs only error-message context.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # bucketed scans report their sortBy ordering (only possible
-        # when each bucket is ONE file — operators/scale.write_bucketed
-        # guarantees that layout): downstream sort-merge joins then
-        # skip re-sorting the bucketed side on EVERY read. Measured r13
-        # on q_graph_pagerank: the per-round SMJ's Sort over the
-        # 1.18M-row edge side disappears from the plan (plans/r13).
-        # Cost: planning lists files of bucketed tables — only the
-        # repo's own prepared tables, and at 100 TB one listing per
-        # plan vs a full-table sort per iteration is the right trade.
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         # events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
         # default (FIXTURES.md: ns → µs policy). Read nanos as long and
         # convert to µs timestamps at the view layer (sources/catalog.py).

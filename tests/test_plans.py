@@ -1406,6 +1406,40 @@ def test_bfs_cc_prepared_edges_identity_and_bucketed_scan(spark, sf_dir, tmp_pat
         spark.sql("DROP TABLE IF EXISTS bkt_cc_edges")
 
 
+def test_sorted_bucket_scan_independent_of_session_build(spark, tmp_path):
+    """The edge side's sort order comes from the bucketed call sites,
+    not from how the session was built: in a new session with the
+    sorted-bucket-scan conf unset, prepared edges still reach the
+    sort-merge join with neither an exchange nor a sort above the
+    scan."""
+    from pyspark.sql import functions as F
+
+    from datafusion_wasm_bindings_spark.operators.dedup import prepare_cc_edges
+
+    conf = "spark.sql.legacy.bucketedTableScan.outputOrdering"
+    bare = spark.newSession()
+    bare.conf.unset(conf)
+    assert bare.conf.get(conf) == "false"
+    bare.conf.set("spark.sql.shuffle.partitions", "8")
+    bare.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    pairs = bare.createDataFrame(
+        [(i % 17, (i * 5 + 1) % 17) for i in range(120)], "id_a long, id_b long"
+    ).filter("id_a != id_b")
+    try:
+        prep = prepare_cc_edges(
+            bare, pairs, "bkt_bare_edges", buckets=8, path=str(tmp_path / "e")
+        )
+        labels = prep.select(F.col("a").alias("node")).distinct().select(
+            "node", F.col("node").alias("comp")
+        )
+        plan = _plan(prep.join(labels.select(F.col("node").alias("b"), "comp"), "b"))
+        assert "Bucketed: true" in plan, plan
+        edge_side = plan.split("SortMergeJoin", 1)[1].split("FileScan parquet", 1)[0]
+        assert "Exchange" not in edge_side and "Sort " not in edge_side, plan
+    finally:
+        bare.sql("DROP TABLE IF EXISTS bkt_bare_edges")
+
+
 def test_drift_stats_single_fact_scan(spark, sf_dir):
     """q_ml_auc / q_ml_ks_drift / q_ml_psi: the distinct-score (or
     bin) table is localCheckpointed, so the FACT scan + combinable
