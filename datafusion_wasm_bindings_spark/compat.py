@@ -17,6 +17,14 @@ rewrites applied by ``SQLEngine`` before ``spark.sql``:
 These are regex rewrites over statements our engine dispatches — not
 a general SQL parser; patterns inside string literals are protected by
 masking literals first.
+
+This module also holds the one SQL lexer (``_TOKEN_RE``, applied by
+``_mask`` / ``_unmask``) and the one paren-level scanner (``_level``)
+built on its masked text. No other module scans quotes, comments or
+parens: ``engine.split_statements`` splits on ``;`` in the masked
+script, ``engine`` splits EXECUTE argument and PREPARE type lists with
+``_split_list`` and binds ``$n`` markers on masked text, and
+``queries._swap_table_refs`` swaps table names on masked text.
 """
 
 from __future__ import annotations
@@ -48,73 +56,97 @@ ARROW_TO_SPARK_TYPE = {
 }
 
 
-def _mask_literals(sql: str) -> tuple[str, list[str]]:
-    """Single left-to-right scan that (a) replaces 'string literals'
-    with placeholders so rewrites never touch literal contents,
-    (b) converts double-quoted identifiers to Spark backticks in place
-    (DataFusion/Postgres dialect, SURVEY §1.1 — unambiguous because ''
-    is the string quote and "" the identifier quote), and (c) masks
-    -- line and /* block */ comments with the SAME placeholders, so a
-    function name or DISTINCT ON mentioned inside a comment can never
-    trigger a rewrite (ADVICE r4); comments are restored verbatim by
-    ``_unmask``.
+# The one SQL lexer. '…' strings ('' escapes), "…" identifiers (""
+# escapes), -- line comments and /* block */ comments; an unterminated
+# token runs to the end of the text.
+_TOKEN_RE = re.compile(
+    r"'[^']*(?:''[^']*)*'?"
+    r'|"(?P<ident>[^"]*(?:""[^"]*)*)"?'
+    r"|--[^\n]*"
+    r"|/\*(?:.*?\*/|.*)",
+    re.DOTALL,
+)
+_PLACEHOLDER_RE = re.compile(r"\x00[LCI](\d+)\x00")
 
-    A regex pass per quote kind cannot do this: a single quote inside
-    "a'b" or inside a comment would open a phantom string literal and
-    swallow everything up to the next real quote (observed live on
-    SELECT "a'b" AS x, 'y' AS s). One scanner, one source of truth for
-    what is quoted."""
-    literals: list[str] = []
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            literals.append(sql[i : min(j + 1, n)])
-            out.append(f"\x00L{len(literals) - 1}\x00")
-            i = j + 1
-        elif c == '"':
-            j = i + 1
-            while j < n:
-                if sql[j] == '"':
-                    if j + 1 < n and sql[j + 1] == '"':
-                        j += 2
-                        continue
-                    break
-                j += 1
-            body = sql[i + 1 : j].replace('""', '"').replace("`", "``")
-            out.append("`" + body + "`")
-            i = j + 1
-        elif c == "-" and sql[i : i + 2] == "--":
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            literals.append(sql[i:j])
-            out.append(f"\x00C{len(literals) - 1}\x00")
-            i = j
-        elif c == "/" and sql[i : i + 2] == "/*":
-            j = sql.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            literals.append(sql[i:j])
-            out.append(f"\x00C{len(literals) - 1}\x00")
-            i = j
+
+def _mask(sql: str, backtick_idents: bool = False) -> tuple[str, list[str]]:
+    """Replace every string literal, comment and quoted identifier with
+    a placeholder (\\x00L<i>\\x00, \\x00C<i>\\x00, \\x00I<i>\\x00; ``spans[i]``
+    keeps its text), so a text pass never sees a quote, a comment or
+    anything inside one; ``_unmask`` restores the spans verbatim.
+
+    With ``backtick_idents`` a "quoted identifier" is instead rewritten
+    in place to Spark's backtick form (DataFusion/Postgres dialect,
+    SURVEY §1.1 — unambiguous because '' is the string quote and "" the
+    identifier quote). Comments are masked so a function name or
+    DISTINCT ON mentioned inside one can never trigger a rewrite (ADVICE
+    r4). One lexer decides what is quoted: a single quote inside "a'b"
+    or a comment never opens a phantom string literal."""
+    spans: list[str] = []
+
+    def repl(m: re.Match) -> str:
+        tok = m.group(0)
+        if backtick_idents and tok[0] == '"':
+            return "`" + m.group("ident").replace('""', '"').replace("`", "``") + "`"
+        spans.append(tok)
+        kind = {"'": "L", '"': "I"}.get(tok[0], "C")
+        return f"\x00{kind}{len(spans) - 1}\x00"
+
+    return _TOKEN_RE.sub(repl, sql), spans
+
+
+def _unmask(sql: str, spans: list[str]) -> str:
+    return _PLACEHOLDER_RE.sub(lambda m: spans[int(m.group(1))], sql)
+
+
+_PAREN_RE = re.compile(r"[(),]")
+
+
+def _level(masked: str, start: int = 0) -> tuple[list[int], int]:
+    """Scan masked text from ``start`` at paren depth 0: returns the
+    positions of the commas at that depth and the index of the first
+    ')' that closes it (``len(masked)`` if none)."""
+    commas: list[int] = []
+    depth = 0
+    for m in _PAREN_RE.finditer(masked, start):
+        ch = m.group()
+        if ch == "(":
+            depth += 1
+        elif ch == ",":
+            if not depth:
+                commas.append(m.start())
+        elif not depth:
+            return commas, m.start()
         else:
-            out.append(c)
-            i += 1
-    return "".join(out), literals
+            depth -= 1
+    return commas, len(masked)
 
 
-def _unmask(sql: str, literals: list[str]) -> str:
-    for i, lit in enumerate(literals):
-        sql = sql.replace(f"\x00L{i}\x00", lit).replace(f"\x00C{i}\x00", lit)
-    return sql
+def _cut(masked: str, start: int, commas: list[int], end: int) -> list[str]:
+    """``masked[start:end]`` cut at ``commas``, pieces stripped. Blank
+    text has no pieces; an empty last piece is kept ('1,' is two)."""
+    pieces = [
+        masked[a:b].strip()
+        for a, b in zip([start, *(c + 1 for c in commas)], [*commas, end])
+    ]
+    return [] if pieces == [""] else pieces
+
+
+_NOISE_RE = re.compile(r"^(?:\s|\(|\x00C\d+\x00)+")
+
+
+def _skip_noise(sql: str) -> str:
+    """``sql`` past its leading whitespace, comments and opening parens."""
+    masked, spans = _mask(sql)
+    return _unmask(_NOISE_RE.sub("", masked), spans)
+
+
+def _split_list(text: str) -> list[str]:
+    """Split raw text on commas outside quotes, comments and parens. A
+    stray ')' ends the splitting: the rest stays in the last piece."""
+    masked, spans = _mask(text)
+    commas, _ = _level(masked)
+    return [_unmask(p, spans).strip() for p in _cut(masked, 0, commas, len(masked))]
 
 
 def similar_to_regex(pattern: str) -> str:
@@ -250,35 +282,6 @@ _FN_RENAME_RE = re.compile(
 )
 
 
-def _parse_args(s: str, open_paren: int) -> tuple[list[str], int]:
-    """Parse a balanced argument list starting at ``s[open_paren] ==
-    '('``; returns (args, index just past the closing paren). Operates
-    on literal-masked text, so quotes need no handling."""
-    args: list[str] = []
-    buf: list[str] = []
-    depth = 1
-    i = open_paren + 1
-    while i < len(s) and depth:
-        ch = s[i]
-        if ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            if depth:
-                buf.append(ch)
-        elif ch == "," and depth == 1:
-            args.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail or args:
-        args.append(tail)
-    return args, i
-
-
 def _rewrite_calls(masked: str, name: str, make: "callable") -> str:
     """Replace every ``name(args…)`` call with ``make(args)`` output,
     re-scanning until no occurrences remain (handles nesting as long as
@@ -288,8 +291,9 @@ def _rewrite_calls(masked: str, name: str, make: "callable") -> str:
         m = pat.search(masked)
         if m is None:
             return masked
-        args, end = _parse_args(masked, m.end() - 1)
-        masked = masked[: m.start()] + make(args) + masked[end:]
+        commas, close = _level(masked, m.end())
+        args = _cut(masked, m.end(), commas, close)
+        masked = masked[: m.start()] + make(args) + masked[close + 1 :]
 
 
 # SELECT DISTINCT ON (<keys>) <list> FROM <rest> [ORDER BY <order>]
@@ -316,17 +320,7 @@ def rewrite_distinct_on(masked: str) -> str:
         if not m2:
             return masked
         s = m2.start()
-        depth = 0
-        e = len(masked)
-        for i in range(s, len(masked)):
-            ch = masked[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    e = i
-                    break
+        e = _level(masked, s)[1]
         m = _DISTINCT_ON_RE.match(masked[s:e])
         if not m:
             # unparseable shape: leave the statement untouched rather
@@ -393,33 +387,9 @@ _TAIL_KW_RE = re.compile(
 )
 
 
-def _depths(masked: str) -> list:
-    """Paren depth at each character index of literal-masked text."""
-    out = [0] * len(masked)
-    d = 0
-    for i, ch in enumerate(masked):
-        if ch == "(":
-            out[i] = d
-            d += 1
-        elif ch == ")":
-            d -= 1
-            out[i] = d
-        else:
-            out[i] = d
-    return out
-
-
 def _balanced_end(masked: str, open_paren: int) -> int:
     """Index just past the ')' matching ``masked[open_paren] == '('``."""
-    depth = 0
-    for i in range(open_paren, len(masked)):
-        if masked[i] == "(":
-            depth += 1
-        elif masked[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-    return len(masked)
+    return min(_level(masked, open_paren + 1)[1] + 1, len(masked))
 
 
 def rewrite_groups_frames(masked: str) -> str:
@@ -436,22 +406,21 @@ def rewrite_groups_frames(masked: str) -> str:
         if target is None:
             return masked
         s_over, _, _ = target
-        depth = _depths(masked)
-        d0 = depth[s_over]
+
+        def depth(i: int) -> int:  # paren depth at a keyword's index
+            return masked.count("(", 0, i) - masked.count(")", 0, i)
+
+        d0 = depth(s_over)
         sel_start = None
         for sm in _SELECT_RE.finditer(masked, 0, s_over):
-            if depth[sm.start()] == d0:
+            if depth(sm.start()) == d0:
                 sel_start = sm.start()
         if sel_start is None:
             return masked
-        span_end = len(masked)
-        for i in range(s_over, len(masked)):
-            if depth[i] < d0:
-                span_end = i
-                break
+        span_end = _level(masked, s_over)[1]
         from_pos = None
         for fm in _FROM_RE.finditer(masked, sel_start, span_end):
-            if depth[fm.start()] == d0:
+            if depth(fm.start()) == d0:
                 from_pos = fm
                 break
         if from_pos is None:
@@ -465,7 +434,7 @@ def rewrite_groups_frames(masked: str) -> str:
         replacements = []  # (abs_start, abs_end, new_text)
         for m in _OVER_RE.finditer(sel_list):
             abs_over = base + m.start()
-            if depth[abs_over] != d0:
+            if depth(abs_over) != d0:
                 continue
             op = base + m.end() - 1
             end = _balanced_end(masked, op)
@@ -493,7 +462,7 @@ def rewrite_groups_frames(masked: str) -> str:
         where_span = None
         tail_start = len(rest)
         for km in _TAIL_KW_RE.finditer(rest):
-            if depth[rest_base + km.start()] != d0:
+            if depth(rest_base + km.start()) != d0:
                 continue
             kw = re.sub(r"\s+", " ", km.group(1).upper())
             if kw in ("GROUP BY", "HAVING", "WINDOW", "QUALIFY", "UNION", "INTERSECT", "EXCEPT"):
@@ -550,7 +519,7 @@ def rewrite(sql: str) -> str:
     m = _SHOW_VAR_RE.match(sql)
     if m:
         sql = f"SET {m.group(1)}"
-    masked, lits = _mask_literals(sql)
+    masked, lits = _mask(sql, backtick_idents=True)
 
     def _kept_comments(m: re.Match) -> str:
         """Comment placeholders consumed by an adjacency rewrite:
@@ -686,4 +655,4 @@ def rewrite(sql: str) -> str:
 
 
 def needs_information_schema(sql: str) -> bool:
-    return bool(_INFO_SCHEMA_RE.search(_mask_literals(sql)[0]))
+    return bool(_INFO_SCHEMA_RE.search(_mask(sql, backtick_idents=True)[0]))

@@ -26,6 +26,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datafusion_wasm_bindings_spark.compat import _mask, _skip_noise, _split_list, _unmask
 from datafusion_wasm_bindings_spark.errors import EngineError, classify_spark_error
 from datafusion_wasm_bindings_spark.formats import ResultFormat, format_result
 from datafusion_wasm_bindings_spark.session import get_spark
@@ -34,55 +35,9 @@ from datafusion_wasm_bindings_spark.session import get_spark
 def split_statements(sql: str) -> list[str]:
     """Split a script on ``;`` outside quotes/comments (reference parses
     multi-statement scripts via DFParser, core.rs:103-111)."""
-    stmts: list[str] = []
-    buf: list[str] = []
-    i, n = 0, len(sql)
-    in_s = in_d = in_line_comment = in_block_comment = False
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if in_line_comment:
-            buf.append(ch)
-            if ch == "\n":
-                in_line_comment = False
-        elif in_block_comment:
-            buf.append(ch)
-            if ch == "*" and nxt == "/":
-                buf.append(nxt)
-                i += 1
-                in_block_comment = False
-        elif in_s:
-            buf.append(ch)
-            if ch == "'":
-                if nxt == "'":
-                    buf.append(nxt)
-                    i += 1
-                else:
-                    in_s = False
-        elif in_d:
-            buf.append(ch)
-            if ch == '"':
-                in_d = False
-        elif ch == "-" and nxt == "-":
-            buf.append(ch)
-            in_line_comment = True
-        elif ch == "/" and nxt == "*":
-            buf.append(ch)
-            in_block_comment = True
-        elif ch == "'":
-            buf.append(ch)
-            in_s = True
-        elif ch == '"':
-            buf.append(ch)
-            in_d = True
-        elif ch == ";":
-            stmts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    stmts.append("".join(buf))
-    return [s.strip() for s in stmts if s.strip()]
+    masked, spans = _mask(sql)
+    stmts = (_unmask(s, spans).strip() for s in masked.split(";"))
+    return [s for s in stmts if s]
 
 
 _EXTERNAL_TABLE_RE = re.compile(
@@ -188,55 +143,7 @@ _COPY_RE = re.compile(
 )
 
 
-def _split_exec_args(args: str) -> list[str]:
-    """Split EXECUTE's argument list on top-level commas (respects
-    quoted strings and parentheses)."""
-    out: list[str] = []
-    buf: list[str] = []
-    depth = 0
-    in_s = False
-    i = 0
-    while i < len(args):
-        ch = args[i]
-        if in_s:
-            buf.append(ch)
-            if ch == "'":
-                if i + 1 < len(args) and args[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    in_s = False
-        elif ch == "'":
-            buf.append(ch)
-            in_s = True
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            out.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        out.append(tail)
-    return out
-
-
 _QUERY_SHAPED_RE = re.compile(r"^\s*(SELECT|WITH|VALUES|TABLE)\b", re.IGNORECASE)
-# EXPLAIN-body noise a valid query may legally lead with before its
-# first keyword: whitespace, -- line / /* block */ comments, and
-# opening parens (EXPLAIN (SELECT 1), EXPLAIN /* hint */ SELECT …) —
-# DataFusion plans both forms (ADVICE r10). Stripped only for the
-# SHAPE check; the dispatched body keeps them verbatim (Spark parses
-# both, verified on 4.1.2).
-_QUERY_HEAD_NOISE_RE = re.compile(
-    r"^(?:\s+|--[^\n]*(?:\n|$)|/\*.*?\*/|\()+", re.DOTALL
-)
 
 # EXPLAIN dispatch is separator-agnostic: 'EXPLAIN\nSELECT 1' and
 # tab-separated forms take the same DataFusion two-row branch as the
@@ -260,23 +167,7 @@ _PREPARE_TYPE_MAP = {
 def _split_prepare_types(types: str | None) -> list[str]:
     """Split a PREPARE type list on top-level commas (DECIMAL(18, 2)
     contains a nested comma) and normalize spellings."""
-    if not types or not types.strip():
-        return []
-    out: list[str] = []
-    depth, buf = 0, []
-    for ch in types:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    if "".join(buf).strip():
-        out.append("".join(buf).strip())
-    return [_PREPARE_TYPE_MAP.get(t.upper(), t.upper()) for t in out]
+    return [_PREPARE_TYPE_MAP.get(t.upper(), t.upper()) for t in _split_list(types or "")]
 
 
 class SQLEngine:
@@ -384,7 +275,7 @@ class SQLEngine:
         m = _EXECUTE_RE.match(stmt)
         if m and m.group("name").lower() in self._prepared:
             body, types = self._prepared[m.group("name").lower()]
-            args = _split_exec_args(m.group("args") or "")
+            args = _split_list(m.group("args") or "")
             if types and len(types) != len(args):
                 from datafusion_wasm_bindings_spark.errors import PlanError
 
@@ -392,7 +283,7 @@ class SQLEngine:
                     f"EXECUTE {m.group('name')}: expected {len(types)} "
                     f"parameters, got {len(args)}"
                 )
-            if args and _QUERY_SHAPED_RE.match(body):
+            if args and _QUERY_SHAPED_RE.match(_skip_noise(body)):
                 return self._execute_bound(body, args, types)
             # non-query template (COPY, DDL): typed-literal substitution,
             # highest index first so $12 is not clobbered by $1
@@ -453,11 +344,12 @@ class SQLEngine:
 
                     raise ParseError("EXPLAIN VERBOSE requires a statement")
                 body = parts[1]
-            # shape-check past leading comments/parens a valid query
-            # may carry (ADVICE r10: EXPLAIN (SELECT 1) and
-            # EXPLAIN /* hint */ SELECT … are plannable, not
-            # side-effecting); dispatch still receives `body` verbatim
-            shape_head = _QUERY_HEAD_NOISE_RE.sub("", body)
+            # shape-check past the leading whitespace, comments and
+            # parens a valid query may carry (ADVICE r10: EXPLAIN
+            # (SELECT 1) and EXPLAIN /* hint */ SELECT … are plannable,
+            # not side-effecting — DataFusion plans both, Spark parses
+            # both on 4.1.2); dispatch still receives `body` verbatim
+            shape_head = _skip_noise(body)
             if not _QUERY_SHAPED_RE.match(shape_head):
                 # DataFusion's EXPLAIN only PLANS its body; dispatching
                 # a non-query body here would EXECUTE it (COPY writes
@@ -538,9 +430,9 @@ class SQLEngine:
         coercion DataFusion performs at bind time), then the template's
         $n markers are bound as named parameters via Spark's
         parameterized ``sql()``. Repeated markers ($1 used twice) bind
-        the same value; a parameter can never inject clause text.
-        Limitation (documented): a literal ``$n`` inside a string
-        constant in the template is also treated as a marker.
+        the same value; a parameter can never inject clause text. A
+        ``$n`` inside a string literal, quoted identifier or comment of
+        the template is text, not a marker.
         """
         exprs = []
         for i, a in enumerate(args):
@@ -550,7 +442,8 @@ class SQLEngine:
             exprs.append(f"{e} AS p{i}")
         row = self._run_sql("SELECT " + ", ".join(exprs)).collect()[0]
         values = {f"dfwb_p{i + 1}": row[i] for i in range(len(args))}
-        bound = re.sub(r"\$(\d+)", r":dfwb_p\1", body)
+        masked, spans = _mask(body)
+        bound = _unmask(re.sub(r"\$(\d+)", r":dfwb_p\1", masked), spans)
         return self._run_sql(bound, args=values)
 
     def _copy_to(self, m: re.Match) -> DataFrame:

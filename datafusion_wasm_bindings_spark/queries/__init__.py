@@ -160,48 +160,15 @@ def query(
 
 def _swap_table_refs(text: str, table: str, view: str) -> str:
     """Replace whole-word references to ``table`` with ``view``, never
-    touching string literals or comments (the compat scanner's r5
-    masking convention — ADVICE r12 on sql_query's raw re.sub): one
-    left-to-right scan masks '…' literals (with '' escapes) and
-    ``--`` / ``/* */`` comments behind \\x00 placeholders, the
-    word-boundary substitution runs on the masked text only, and the
-    masked spans are restored verbatim."""
+    touching string literals, quoted text or comments (ADVICE r12 on
+    sql_query's raw re.sub): the substitution runs on compat's masked
+    text and the masked spans are restored verbatim."""
     import re
 
-    spans: list[str] = []
-    out: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            spans.append(text[i : min(j + 1, n)])
-            out.append(f"\x00{len(spans) - 1}\x00")
-            i = j + 1
-        elif c == "-" and text[i : i + 2] == "--":
-            j = text.find("\n", i)
-            j = n if j < 0 else j
-            spans.append(text[i:j])
-            out.append(f"\x00{len(spans) - 1}\x00")
-            i = j
-        elif c == "/" and text[i : i + 2] == "/*":
-            j = text.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            spans.append(text[i:j])
-            out.append(f"\x00{len(spans) - 1}\x00")
-            i = j
-        else:
-            out.append(c)
-            i += 1
-    masked = re.sub(rf"\b{re.escape(table)}\b", view, "".join(out))
-    return re.sub(r"\x00(\d+)\x00", lambda m: spans[int(m.group(1))], masked)
+    from datafusion_wasm_bindings_spark.compat import _mask, _unmask
+
+    masked, spans = _mask(text)
+    return _unmask(re.sub(rf"\b{re.escape(table)}\b", view, masked), spans)
 
 
 def sql_query(

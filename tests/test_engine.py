@@ -290,6 +290,31 @@ def test_prepare_binding_does_not_splice_clause_text(engine):
         "EXECUTE ts('a'' OR ''1''=''1')"
     )
     assert "a" not in out.replace("| x |", "").replace("-", "")
+    # a template led by a comment is still a query: bound, not spliced
+    engine.execute_sql(
+        "PREPARE tsc AS /* c */ SELECT x FROM VALUES ('a'), ('b') t(x) WHERE x = $1"
+    )
+    with pytest.raises(EngineError):
+        engine.sql("EXECUTE tsc('z' OR TRUE)").collect()
+
+
+def test_execute_comma_inside_comment_is_not_a_separator(engine):
+    engine.execute_sql("PREPARE tcm (INT, INT) AS SELECT $1 + $2 AS s")
+    assert engine.sql("EXECUTE tcm(1 /* a, b */, 2)").collect()[0]["s"] == 3
+
+
+def test_execute_empty_trailing_argument_fails(engine):
+    # an empty trailing argument is an argument, so the malformed call
+    # fails instead of silently binding one value
+    engine.execute_sql("PREPARE tun AS SELECT $1 AS v")
+    with pytest.raises(EngineError):
+        engine.sql("EXECUTE tun(1,)").collect()
+
+
+def test_prepare_marker_inside_literal_is_text(engine):
+    engine.execute_sql("PREPARE tlit (INT) AS SELECT '$1' AS lit, $1 AS v")
+    row = engine.sql("EXECUTE tlit(5)").collect()[0]
+    assert (row["lit"], row["v"]) == ("$1", 5)
 
 
 def test_show_all_lists_settings(engine):
@@ -606,6 +631,7 @@ def test_fuzz_split_statements_semicolons_in_tokens():
             ", 'it''s;x' AS e",
             ', "c;d" AS q',
             " /* ; mid ; */",
+            " /*/ ; */",  # '/*/' opens a comment, it does not close one
             " -- tail;comment\n",  # newline-terminated: safe mid-script
         ]
     )
